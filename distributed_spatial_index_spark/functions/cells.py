@@ -13,6 +13,9 @@ DuckDB SQL) from the same loop, so the oracle comparison is exact.
 
 from __future__ import annotations
 
+import threading
+from collections.abc import Callable
+
 import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -49,11 +52,14 @@ def cell_coord_sql(v: str, lo: float, extent: float, bits: int) -> str:
 
 
 # Bit spreading by binary magic numbers ("Interleave bits by Binary Magic
-# Numbers", the classic public bit-twiddling hack): 5 shift-mask steps where
-# each step consumes the PREVIOUS step's result exactly once.  The naive
-# per-bit loop would inline the (large) cell-coordinate expression once per
-# bit — Spark's generated code then exceeds the JIT method limit and falls
-# back to interpretation (measured: ~10x CPU on the join hot path).
+# Numbers", the classic public bit-twiddling hack): 5 shift-mask steps.
+# Each step references the previous step's result twice (``out`` and
+# ``out << s``), so the expression tree doubles per step: the analyzed
+# tree holds 2^5 = 32 copies of each axis's coordinate expression (64 in
+# cell_id_col).  The per-bit loop this replaced was measured falling back
+# to interpreted evaluation (~10x CPU on the join hot path).  The tree's
+# size is also why building it costs tens of milliseconds of py4j calls,
+# and why cell_id_col / covering_cells_col cache it (below).
 _SPREAD_STEPS: list[tuple[int, int]] = [
     (16, 0x0000FFFF0000FFFF),
     (8, 0x00FF00FF00FF00FF),
@@ -109,6 +115,53 @@ def morton_decode_np(code: np.ndarray, bits: int) -> tuple[np.ndarray, np.ndarra
 
 
 # ---------------------------------------------------------------------------
+# kernel cache
+# ---------------------------------------------------------------------------
+
+# Every F.* call and Column operator is at least one py4j round trip, so
+# building a cell kernel's tree costs 45-100 ms of driver time (4-vCPU
+# VM) — paid on every request, before Spark sees a plan; a cache hit
+# costs 1-6 ms (the key's py4j calls).  The trees are pure functions
+# of their inputs, so each distinct (input expressions, bits, region) is
+# built once per process and the same Column is handed out again.  A
+# Column tree holds no session state and the JVM outlives a session, so
+# entries stay valid across SparkSession stop/start.
+_KERNELS: dict[tuple, Column] = {}
+_KERNELS_MAX = 256
+_KERNELS_LOCK = threading.Lock()
+
+
+def _expr_key(c: Column) -> str | None:
+    """Exact identity of a Column's expression: its JVM node with origin
+    and call site stripped, printed in full — a resolved ``df["x"]``
+    carries its exprId, so it never shares an entry with ``F.col("x")``.
+    None when the Column has no JVM node (not cached)."""
+    jc = getattr(c, "_jc", None)
+    if jc is None:
+        return None
+    return jc.node().normalized().toString()
+
+
+def _cached_kernel(
+    name: str, inputs: tuple[Column, ...], bits: int, region: Region,
+    build: Callable[[], Column],
+) -> Column:
+    keys = tuple(_expr_key(c) for c in inputs)
+    if None in keys:
+        return build()
+    key = (name, keys, bits, region)
+    with _KERNELS_LOCK:
+        hit = _KERNELS.get(key)
+    if hit is not None:
+        return hit
+    col = build()
+    with _KERNELS_LOCK:
+        if len(_KERNELS) >= _KERNELS_MAX:
+            _KERNELS.pop(next(iter(_KERNELS)))
+        return _KERNELS.setdefault(key, col)
+
+
+# ---------------------------------------------------------------------------
 # point -> cell id  /  rect -> covering cell ids
 # ---------------------------------------------------------------------------
 
@@ -116,10 +169,15 @@ def morton_decode_np(code: np.ndarray, bits: int) -> tuple[np.ndarray, np.ndarra
 def cell_id_col(
     x: Column, y: Column, bits: int, region: Region = DEFAULT_REGION
 ) -> Column:
-    """Morton cell id of a point at the given resolution (Spark, codegen'd)."""
-    cx = cell_coord_col(x, region.x_lo, region.width, bits)
-    cy = cell_coord_col(y, region.y_lo, region.height, bits)
-    return morton_col(cx, cy, bits)
+    """Morton cell id of a point at the given resolution (Spark, codegen'd).
+    Built once per (x, y, bits, region) and reused (see _cached_kernel)."""
+
+    def build() -> Column:
+        cx = cell_coord_col(x, region.x_lo, region.width, bits)
+        cy = cell_coord_col(y, region.y_lo, region.height, bits)
+        return morton_col(cx, cy, bits)
+
+    return _cached_kernel("cell_id", (x, y), bits, region, build)
 
 
 def cell_id_np(
@@ -151,19 +209,26 @@ def covering_cells_col(
     Spark-side analogue of the reference's tree search that routes one copy
     of an item to every intersecting leaf (GlobalTreePF.java:51-72,
     GTree.java:395-407).  Built from ``sequence`` + ``transform`` +
-    ``flatten`` — pure built-ins, no Python.
+    ``flatten`` — pure built-ins, no Python.  Built once per (inputs,
+    bits, region) and reused (see _cached_kernel).
     """
-    cxmin = cell_coord_col(xmin, region.x_lo, region.width, bits)
-    cxmax = cell_coord_col(xmax, region.x_lo, region.width, bits)
-    cymin = cell_coord_col(ymin, region.y_lo, region.height, bits)
-    cymax = cell_coord_col(ymax, region.y_lo, region.height, bits)
-    return F.flatten(
-        F.transform(
-            F.sequence(cxmin, cxmax),
-            lambda cx: F.transform(
-                F.sequence(cymin, cymax), lambda cy: morton_col(cx, cy, bits)
-            ),
+
+    def build() -> Column:
+        cxmin = cell_coord_col(xmin, region.x_lo, region.width, bits)
+        cxmax = cell_coord_col(xmax, region.x_lo, region.width, bits)
+        cymin = cell_coord_col(ymin, region.y_lo, region.height, bits)
+        cymax = cell_coord_col(ymax, region.y_lo, region.height, bits)
+        return F.flatten(
+            F.transform(
+                F.sequence(cxmin, cxmax),
+                lambda cx: F.transform(
+                    F.sequence(cymin, cymax), lambda cy: morton_col(cx, cy, bits)
+                ),
+            )
         )
+
+    return _cached_kernel(
+        "covering_cells", (xmin, ymin, xmax, ymax), bits, region, build
     )
 
 

@@ -82,7 +82,11 @@ def shingles(docs: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
     cluster has slots (the testdata parquet is one row group -> a single
     serial task), the narrow doc rows are repartitioned first so that work
     runs wide.  At deployment scale the scan is already wide and this is a
-    no-op."""
+    no-op.
+
+    A NULL text has no shingles: the split/slice chain would emit one
+    ``(doc_id, NULL)`` row for it, which would give every null-text doc
+    the same minhash signature (one shared LSH bucket), so it is dropped."""
     par = docs.sparkSession.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)
@@ -93,6 +97,7 @@ def shingles(docs: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
     )
     return (
         docs.select("doc_id", F.explode(sh).alias("shingle"))
+        .filter(F.col("shingle").isNotNull())
         .dropDuplicates(["doc_id", "shingle"])
     )
 
@@ -100,13 +105,14 @@ def shingles(docs: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
 def shingles_sql(table: str = "documents", n: int = 3, text_col: str = "text") -> str:
     # correlated unnest(range(...)): exact per-row position bound, so the
     # oracle matches Spark at ANY document length (a fixed range table would
-    # silently truncate long documents)
+    # silently truncate long documents); NULL texts have no shingles
     toks = f"string_split(lower(trim({text_col})), ' ')"
     return f"""
         SELECT DISTINCT doc_id,
                array_to_string({toks}[CAST(j AS INT):CAST(j + {n - 1} AS INT)], ' ') AS shingle
         FROM {table},
              unnest(range(1, greatest(len({toks}) - {n - 1}, 1) + 1)) AS t(j)
+        WHERE {text_col} IS NOT NULL
     """
 
 
@@ -198,10 +204,11 @@ def capped_shingles(
     # only exists to drop the stopword tail), so the keep-side broadcast
     # was corpus-vocabulary-sized — a driver collect + per-executor hash
     # relation that grows with the corpus.  The over-cap set is the tiny
-    # complement (shingles shared by > max_df docs), bounded by
-    # n_docs / max_df regardless of vocabulary size.  Equivalent rows:
-    # shingles are never NULL (explode skips null texts), so anti-join on
-    # the complement == semi-join on the keep set.
+    # complement (shingles shared by > max_df docs), bounded by total
+    # shingle rows / max_df (~ n_docs x shingles-per-doc / max_df),
+    # regardless of vocabulary size.  Equivalent rows: shingles() drops
+    # NULL shingles (null texts), so anti-join on the complement ==
+    # semi-join on the keep set.
     df_counts = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     hot = df_counts.filter(F.col("df") > max_df).select("shingle")
     return sh.join(F.broadcast(hot), "shingle", "left_anti")

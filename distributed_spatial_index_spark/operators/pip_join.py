@@ -21,14 +21,18 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from distributed_spatial_index_spark.config import DEFAULT_REGION, JOIN_BITS, Region
 from distributed_spatial_index_spark.functions.cells import (
+    cell_coord_np,
     cell_id_col,
     covering_cells_col,
     morton_decode_np,
+    morton_np,
 )
 
 # Polygons are query-side metadata collected to the driver (broadcast to
@@ -135,7 +139,8 @@ def _classify_cells_np(
     (conservative — edge-touching cells stay boundary).  This is the
     reference's dir-node containment short-circuit (RCDirNode.java:130-132)
     recast for the filter-refine PIP join: interior-cell points skip the
-    Arrow refine entirely.
+    Arrow refine entirely.  Cells on the region's edge are never interior
+    (see below).
     """
     n = 1 << bits
     cw = region.width / n
@@ -145,7 +150,12 @@ def _classify_cells_np(
     rx1 = rx0 + cw
     ry1 = ry0 + ch
 
-    corners_in = np.ones(len(qi), dtype=bool)
+    # Region-edge cells are never interior: cell ids clamp points outside
+    # the region into edge cells, so an edge cell holds points its rect
+    # does not contain.  Keeping edge cells boundary sends those points
+    # through the exact refine instead of emitting them directly.
+    on_edge = (cx == 0) | (cx == n - 1) | (cy == 0) | (cy == n - 1)
+    corners_in = ~on_edge
     for px, py in ((rx0, ry0), (rx0, ry1), (rx1, ry0), (rx1, ry1)):
         corners_in &= _batched_even_odd(px, py, qi, nv, verts)
     edge_hits = np.zeros(len(qi), dtype=bool)
@@ -165,12 +175,14 @@ def _classify_cells_np(
 def _classified_query_cells_df(
     polygons: DataFrame, bc, bits: int, region: Region
 ) -> DataFrame:
-    """DISTRIBUTED build of the classified (query, cell) routing table:
+    """DISTRIBUTED build of the classified (query, cell) routing table,
+    for polygon sets whose cover is past the driver bound (see
+    _driver_query_cells):
     bbox + covering-cell explode stay in whole-stage codegen; the
     interior/boundary classification runs over the exploded rows in
     Arrow-batched mapInPandas against the broadcast polygon tensor.  Finer
     ``bits`` only widens the exploded frame across executors — no driver
-    pandas table, no task-size cliff (round-2 verdict ask #5)."""
+    pandas table, no task-size cliff."""
     vx = F.transform(F.col("vertices"), lambda v: v["x"])
     vy = F.transform(F.col("vertices"), lambda v: v["y"])
     exploded = polygons.select(
@@ -205,6 +217,58 @@ def _classified_query_cells_df(
             "xmin double, ymin double, xmax double, ymax double"
         ),
     )
+
+
+def _driver_query_cells(
+    polys: dict, bits: int, region: Region, max_rows: int
+) -> tuple[pa.Table, pa.Table] | None:
+    """Driver build of the classified (query, cell) routing table for
+    request-scale polygon sets: the same cover and the same
+    _classify_cells_np as _classified_query_cells_df, computed in NumPy
+    on the collected polygons — no Spark stage, no Python worker.  Returns
+    (interior, boundary) Arrow tables, or None when the cover exceeds
+    ``max_rows`` (the classify is ~10 us per row at arity 40, serial).
+
+    Bit-identical to the distributed build: the bbox is the min/max of
+    the same doubles, and cell_coord_np is the NumPy twin of the
+    cell_coord_col inside covering_cells_col."""
+    qids_sorted, nv, verts = _pad_polys(polys)
+    valid = np.arange(verts.shape[1])[None, :] < nv[:, None]
+    vx = verts[:, :, 0]
+    vy = verts[:, :, 1]
+    # an empty ring has no bbox and no cells (Spark: array_min -> NULL)
+    xmin = np.where(valid, vx, np.inf).min(axis=1, initial=np.inf)
+    ymin = np.where(valid, vy, np.inf).min(axis=1, initial=np.inf)
+    xmax = np.where(valid, vx, -np.inf).max(axis=1, initial=-np.inf)
+    ymax = np.where(valid, vy, -np.inf).max(axis=1, initial=-np.inf)
+    has = nv > 0
+    cx0 = cell_coord_np(np.where(has, xmin, 0.0), region.x_lo, region.width, bits)
+    cx1 = cell_coord_np(np.where(has, xmax, 0.0), region.x_lo, region.width, bits)
+    cy0 = cell_coord_np(np.where(has, ymin, 0.0), region.y_lo, region.height, bits)
+    cy1 = cell_coord_np(np.where(has, ymax, 0.0), region.y_lo, region.height, bits)
+    h = cy1 - cy0 + 1
+    counts = np.where(has, (cx1 - cx0 + 1) * h, 0)
+    if int(counts.sum()) > max_rows:
+        return None
+
+    # expand each bbox to its cells, x-major like covering_cells_col
+    qi = np.repeat(np.arange(len(qids_sorted)), counts)
+    off = np.arange(len(qi)) - np.repeat(np.cumsum(counts) - counts, counts)
+    cx = cx0[qi] + off // h[qi]
+    cy = cy0[qi] + off % h[qi]
+    interior = _classify_cells_np(qi, cx, cy, nv, verts, bits, region)
+    qid = np.asarray(qids_sorted, dtype=np.int64)[qi]
+    cell = morton_np(cx, cy, bits)
+    direct = pa.table({
+        "query_id": qid[interior], "cell": cell[interior],
+    })
+    bnd = ~interior
+    boundary = pa.table({
+        "query_id": qid[bnd], "cell": cell[bnd],
+        "xmin": xmin[qi][bnd], "ymin": ymin[qi][bnd],
+        "xmax": xmax[qi][bnd], "ymax": ymax[qi][bnd],
+    })
+    return direct, boundary
 
 
 def _fixed_arity_query_cells(
@@ -298,6 +362,67 @@ def unrolled_raycast_pip_join(
 MAX_UNROLL_GROUPS = 4
 MAX_UNROLL_ARITY = 12
 
+# Request scale.  pip_join reads the caller's polygon table in ONE bounded
+# driver action (an Arrow collect, one Spark job); a table of at most
+# REQUEST_POLYGONS rows is then request scale: that read serves the arity
+# probe, the refine's broadcast and the cell classification, and
+# downstream plans scan a local Arrow copy instead of the caller's frame.
+# The general path (unroll_arity=None) reads up to its MAX_DRIVER_POLYGONS
+# guard, so it never reads twice.  "auto" reads only up to
+# REQUEST_POLYGONS, because a larger table may take the unrolled path,
+# which never collects it; past the bound that read is discarded and the
+# table is probed (and, for the general path, collected) as before — one
+# extra job, ~0.6 s for 16k star polygons.  A request-scale table's
+# (query, cell) table is classified on the driver when the polygons'
+# bboxes cover at most DRIVER_CLASSIFY_ROWS cells, else distributed.
+# Both bounds come from one-off timings (one or two reps per size,
+# 4-vCPU VM, 150k points), not from a benchmark workload.  The driver
+# classify is serial, ~10-15 us a cover row for star polygons of arity
+# 3-40 at JOIN_BITS — 16 polygons (2.2k rows) take 0.04 s, 256 (36k rows)
+# 0.4 s, 1,024 (140k rows) 2.1 s; end to end the two classifies tie at
+# 256 polygons (3.4 s a request) and the distributed one wins at 1,024
+# (3.8 s against 5.7 s).  Past REQUEST_POLYGONS, "auto" on 20k star
+# polygons (general path) ran no slower than before the bounded read
+# existed; on 20k-200k rectangles (unrolled path) one batch read +0.4 to
+# +2.7 s on 4-19 s runs and another no difference — unresolved at two
+# reps a side.
+REQUEST_POLYGONS = 16_384
+DRIVER_CLASSIFY_ROWS = 32_768
+
+
+def _polygon_dict(tbl: pa.Table) -> dict:
+    """{query_id: (n, 2) vertex array} from the collected Arrow table; a
+    query_id seen twice keeps its last ring."""
+    verts = tbl.column("vertices").combine_chunks()
+    flat = verts.flatten()
+    xy = np.column_stack([
+        flat.field("x").to_numpy(zero_copy_only=False),
+        flat.field("y").to_numpy(zero_copy_only=False),
+    ])
+    ends = np.cumsum(pc.list_value_length(verts).fill_null(0).to_numpy())
+    starts = ends - np.diff(ends, prepend=0)
+    return {
+        q: xy[lo:hi]
+        for q, lo, hi in zip(tbl.column("query_id").to_pylist(), starts, ends)
+    }
+
+
+def _local_polygons(polygons: DataFrame, tbl: pa.Table) -> DataFrame:
+    """The collected polygon table as an Arrow-backed local frame with the
+    caller's schema: plans over it scan a LocalTableScan (no Spark job,
+    no Python worker) instead of re-running the caller's frame."""
+    return polygons.sparkSession.createDataFrame(tbl, schema=polygons.schema)
+
+
+def _unroll_groups(sizes: list[int]) -> list[int] | None:
+    """Arity groups "auto" unrolls into codegen joins, or None for the
+    general path.  Single-arity tables obey the same MAX_UNROLL_ARITY cap
+    as the mixed-arity groups: a 100-vertex polygon's XOR-folded predicate
+    chain strains Janino just as much alone as in a group."""
+    if 0 < len(sizes) <= MAX_UNROLL_GROUPS and sizes[-1] <= MAX_UNROLL_ARITY:
+        return sizes
+    return None
+
 
 def pip_join(
     points: DataFrame,
@@ -318,26 +443,57 @@ def pip_join(
     group dedup is needed).  Pass ``None`` to force the general path, or
     an int to skip the detection query.
 
+    The polygon table is read by one bounded collect (see REQUEST_POLYGONS);
+    a request-scale table (<= REQUEST_POLYGONS rows) is read exactly once,
+    and everything downstream runs on that copy.  Past the bound, "auto"
+    probes the arities on the caller's frame as a second action.
+
     General path (arity too varied/large to unroll): broadcast (query,
-    covering-cell) equi-join, with cells classified interior/boundary
-    DISTRIBUTED (bbox explode in codegen + Arrow-batched classification;
-    see _classified_query_cells_df).  Points in interior cells are emitted
+    covering-cell) equi-join, with cells classified interior/boundary —
+    on the driver in NumPy when the cover is request-scale (<=
+    DRIVER_CLASSIFY_ROWS rows, _driver_query_cells), else DISTRIBUTED
+    (bbox explode in codegen + Arrow-batched classification, see
+    _classified_query_cells_df).  Points in interior cells are emitted
     directly inside whole-stage codegen; only boundary-cell candidates
     cross Arrow into the NumPy ray-cast refine.
     """
-    if unroll_arity == "auto":
-        sizes = sorted(
-            r["n"]
-            for r in polygons.select(
-                F.size("vertices").alias("n")
-            ).distinct().collect()
+    if unroll_arity not in ("auto", None, 0):
+        return unrolled_raycast_pip_join(
+            points, polygons, int(unroll_arity), bits, region
         )
-        if (
-            1 < len(sizes) <= MAX_UNROLL_GROUPS
-            and sizes[-1] <= MAX_UNROLL_ARITY
-        ):
+
+    polygons = polygons.select("query_id", "vertices")
+    # one bounded action, read as Arrow (one job, no per-vertex Python
+    # objects): the limit caps what can reach the driver
+    bound = REQUEST_POLYGONS if unroll_arity == "auto" else MAX_DRIVER_POLYGONS
+    rows = polygons.limit(bound + 1).toArrow()
+    request_scale = rows.num_rows <= REQUEST_POLYGONS
+    if request_scale:
+        polygons = _local_polygons(polygons, rows)
+
+    if unroll_arity == "auto":
+        if request_scale:
+            # every row, not one per query_id: a query may hold rings of
+            # different arity, and each needs its own group
+            sizes = sorted(set(
+                pc.list_value_length(rows.column("vertices")).to_pylist()
+            ))
+        else:
+            rows = None
+            sizes = sorted(
+                r["n"]
+                for r in polygons.select(
+                    F.size("vertices").alias("n")
+                ).distinct().collect()
+            )
+        groups = _unroll_groups(sizes)
+        if groups is not None:
+            if len(groups) == 1:
+                return unrolled_raycast_pip_join(
+                    points, polygons, int(groups[0]), bits, region
+                )
             out = None
-            for a in sizes:
+            for a in groups:
                 part = unrolled_raycast_pip_join(
                     points,
                     polygons.filter(F.size("vertices") == a),
@@ -345,52 +501,38 @@ def pip_join(
                 )
                 out = part if out is None else out.unionByName(part)
             return out
-        # single-arity tables obey the SAME arity cap as the mixed-arity
-        # group path: a 100-vertex polygon's XOR-folded predicate chain
-        # strains Janino just as much alone as in a group, so past
-        # MAX_UNROLL_ARITY it takes the general Arrow path too
-        unroll_arity = (
-            sizes[0]
-            if len(sizes) == 1 and sizes[0] <= MAX_UNROLL_ARITY
-            else None
-        )
-    if unroll_arity:
-        return unrolled_raycast_pip_join(
-            points, polygons, int(unroll_arity), bits, region
-        )
+        if rows is None:
+            rows = polygons.limit(MAX_DRIVER_POLYGONS + 1).toArrow()
 
-    spark = points.sparkSession
-
-    # one driver action for guard + collect (was a count job THEN a collect
-    # job): the limit caps what can reach the driver, and overflow past the
-    # cap raises before anything is broadcast
-    poly_rows = (
-        polygons.select("query_id", "vertices")
-        .limit(MAX_DRIVER_POLYGONS + 1)
-        .collect()
-    )
-    if len(poly_rows) > MAX_DRIVER_POLYGONS:
+    # overflow past the cap raises before anything is broadcast
+    if rows.num_rows > MAX_DRIVER_POLYGONS:
         raise ValueError(
-            f"pip_join collects polygons to the driver as query metadata; "
-            f"got > MAX_DRIVER_POLYGONS={MAX_DRIVER_POLYGONS}. "
+            f"pip_join collects polygons to the driver as query "
+            f"metadata; got > MAX_DRIVER_POLYGONS={MAX_DRIVER_POLYGONS}. "
             "Use convex_pip_join (fully distributed) or raise the guard."
         )
-    polys = {
-        r["query_id"]: np.array([(v["x"], v["y"]) for v in r["vertices"]])
-        for r in poly_rows
-    }
+    polys = _polygon_dict(rows)
+    spark = points.sparkSession
     bc = spark.sparkContext.broadcast(polys)
 
-    # lazy localCheckpoint: qcells feeds BOTH union branches below, and
-    # Catalyst pushes each branch's (interior / ~interior) filter into its
-    # own BroadcastExchange subtree — no ReusedExchange — so without the
-    # barrier the Arrow-batched classification (and the polygon-table
-    # scan under it) runs twice per action.  The frame is metadata-scale
-    # (covering cells of the polygon bboxes), so checkpointing it is
-    # cheap and the classify runs once.  Measured plan: MapInPandas 3 -> 2.
-    qcells = _classified_query_cells_df(
-        polygons, bc, bits, region
-    ).localCheckpoint(eager=False)
+    local = (
+        _driver_query_cells(polys, bits, region, DRIVER_CLASSIFY_ROWS)
+        if request_scale else None
+    )
+    if local is not None:
+        qc_int = spark.createDataFrame(local[0])
+        qc_bnd = spark.createDataFrame(local[1])
+    else:
+        # lazy localCheckpoint: qcells feeds BOTH union branches below, and
+        # Catalyst pushes each branch's (interior / ~interior) filter into
+        # its own BroadcastExchange subtree — no ReusedExchange — so
+        # without the barrier the Arrow-batched classification (and the
+        # polygon-table scan under it) runs twice per action.
+        qcells = _classified_query_cells_df(
+            polygons, bc, bits, region
+        ).localCheckpoint(eager=False)
+        qc_int = qcells.filter(F.col("interior")).select("query_id", "cell")
+        qc_bnd = qcells.filter(~F.col("interior")).drop("interior")
 
     pts = points.withColumn("cell", cell_id_col(F.col("x"), F.col("y"), bits, region))
     # The interior/boundary routing is applied to the (tiny, broadcast)
@@ -400,41 +542,23 @@ def pip_join(
     # two branches emitted 13M joined rows EACH (26M emissions for 13M
     # candidates).  Joining each branch against only its own slice of the
     # classified cells emits each candidate exactly once across branches.
-    qc_int = qcells.filter(F.col("interior")).drop("interior")
-    qc_bnd = qcells.filter(~F.col("interior")).drop("interior")
-    # in-region guard: cell ids clamp out-of-region points into edge cells,
-    # so "point is in an interior cell" only implies "inside the polygon"
-    # for points geometrically inside their cell (the refine path re-checks
-    # exactly, the direct path must not).
-    in_region = (
-        (F.col("x") >= F.lit(region.x_lo)) & (F.col("x") <= F.lit(region.x_hi))
-        & (F.col("y") >= F.lit(region.y_lo)) & (F.col("y") <= F.lit(region.y_hi))
+    # Interior cells never lie on the region edge (_classify_cells_np), so
+    # every point in one is geometrically inside its cell, hence inside
+    # the polygon; out-of-region points clamp into edge cells and reach
+    # the refine.
+    direct = pts.join(F.broadcast(qc_int), "cell").select(
+        "query_id", F.col("id").alias("doc_id")
     )
+    # JVM-side bbox prefilter cuts the Arrow transfer into the Python
+    # refine to points that can possibly be inside the polygon.
     bbox = (
         (F.col("x") >= F.col("xmin")) & (F.col("x") <= F.col("xmax"))
         & (F.col("y") >= F.col("ymin")) & (F.col("y") <= F.col("ymax"))
     )
-    direct = (
-        pts.join(F.broadcast(qc_int), "cell")
-        .filter(in_region)
-        .select("query_id", F.col("id").alias("doc_id"))
-    )
-    # JVM-side bbox prefilter cuts the Arrow transfer into the Python
-    # refine to points that can possibly be inside the polygon.  The
-    # second branch keeps the old semantics for clamped out-of-region
-    # points landing in interior cells: they must be refined exactly, not
-    # emitted directly (normally empty; the broadcast of qc_int is reused
-    # from the direct branch).
-    refine_cols = ["query_id", F.col("id").alias("doc_id"), "x", "y"]
     boundary = (
         pts.join(F.broadcast(qc_bnd), "cell")
         .filter(bbox)
-        .select(*refine_cols)
-        .unionByName(
-            pts.join(F.broadcast(qc_int), "cell")
-            .filter(~in_region & bbox)
-            .select(*refine_cols)
-        )
+        .select("query_id", F.col("id").alias("doc_id"), "x", "y")
     )
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

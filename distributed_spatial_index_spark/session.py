@@ -12,6 +12,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory (local mode: the driver JVM is the
+    whole engine, and the other half is left to Python workers and the
+    OS).  A fixed figure above the host's memory lets the heap grow until
+    the kernel OOM-kills the JVM."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "4g"
+    return f"{max(1, total // 2 // (1 << 20))}m"
+
+
 def get_spark(
     app_name: str = "distributed_spatial_index_spark",
     cores: int | str = "*",
@@ -49,7 +61,19 @@ def get_spark(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "128m"),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
+        # Call-site capture off: when on (PySpark's default), every
+        # functions.* call and Column operator also walks the Python stack
+        # and makes extra py4j calls to record its call site.  Measured on
+        # a 4-vCPU VM: F.col 1.8-3.3 ms -> 0.7-1.3 ms, a fresh cell_id_col
+        # 70 -> 48 ms, covering_cells_col 93 -> 58 ms.  Cost: analysis and
+        # runtime errors no longer name the Python line that built the
+        # failing expression (for engine-built expressions that line is in
+        # engine internals anyway); the JVM-side error is unchanged.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
     )
     # Streaming state at deployment scale: the default HDFS-backed store

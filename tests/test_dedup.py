@@ -71,12 +71,24 @@ def test_capped_shingles_anti_join_equals_keep_filter(corpus):
     definitional keep set {(doc, shingle): df(shingle) <= max_df} — the
     r6 rewrite broadcasts the bounded hot tail instead of the vocabulary-
     sized keep set, and this pins the equivalence on a corpus where the
-    cap actually bites (constructed duplicates push shingle df past it)."""
+    cap actually bites (constructed duplicates push shingle df past it).
+    Null-text documents have no shingles: they must not surface as
+    (doc_id, NULL) rows, which would share one minhash signature."""
     max_df = 3
+    null_docs = corpus.sparkSession.createDataFrame(
+        [(90_001, None), (90_002, None)], corpus.schema
+    )
+    docs = corpus.unionByName(null_docs)
     got = {(r["doc_id"], r["shingle"])
-           for r in dd.capped_shingles(corpus, max_df=max_df).collect()}
-    all_sh = [(r["doc_id"], r["shingle"])
-              for r in dd.shingles(corpus).collect()]
+           for r in dd.capped_shingles(docs, max_df=max_df).collect()}
+    # the definitional shingle sets, built in Python from the raw texts
+    all_sh = set()
+    for r in docs.collect():
+        if r["text"] is None:
+            continue
+        toks = r["text"].strip().lower().split(" ")
+        m = max(len(toks) - 2, 1)
+        all_sh |= {(r["doc_id"], " ".join(toks[i:i + 3])) for i in range(m)}
     df_count: dict[str, int] = {}
     for _, s in all_sh:
         df_count[s] = df_count.get(s, 0) + 1

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from distributed_spatial_index_spark.operators.pip_join import (
     pip_join,
@@ -207,11 +208,12 @@ def test_mixed_arity_auto_groups_match_general(spark):
 
 
 def test_general_path_refines_out_of_region_points(spark):
-    """The general path's clamped-point routing (r6): a point OUTSIDE the
-    region clamps into an edge cell; if that cell is classified interior
-    for a polygon overhanging the region edge, the point must still go
-    through the exact refine (branch 3), not be emitted directly — and
-    out-of-region points genuinely inside the polygon must be found."""
+    """The general path's clamped-point routing: a point OUTSIDE the
+    region clamps into an edge cell, which the polygon overhanging the
+    region edge would otherwise cover fully; region-edge cells are never
+    classified interior, so the point must go through the exact refine,
+    not be emitted directly — and out-of-region points genuinely inside
+    the polygon must be found."""
     from pyspark.sql import functions as F
 
     from distributed_spatial_index_spark.config import DEFAULT_REGION
@@ -244,3 +246,141 @@ def test_general_path_refines_out_of_region_points(spark):
     assert got == expect
     # the interesting rows really are the clamped ones
     assert (1, 2) in got and (1, 3) in got and (1, 4) not in got
+
+
+def _star(cx, cy, arity, rng, r0=15.0, r1=60.0):
+    ang = np.sort(rng.uniform(0.0, 2.0 * np.pi, arity))
+    rad = rng.uniform(r0, r1, arity)
+    return np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)])
+
+
+def _request_polygons(spark, polys):
+    """A polygon request as a caller sends it: a frame over a Python list."""
+    return spark.createDataFrame(
+        [(q, [(float(x), float(y)) for x, y in v]) for q, v in polys],
+        "query_id long, vertices array<struct<x:double,y:double>>",
+    )
+
+
+@pytest.mark.parametrize("mode", ["auto", None])
+@pytest.mark.parametrize("scale", ["driver", "cover_too_large", "many_polygons"])
+def test_polygon_request_sides_of_size_selection(spark, monkeypatch, scale, mode):
+    """Polygon requests from a Python list must equal a NumPy even-odd
+    test on every side of the size selection: classified on the driver
+    (request scale), classified distributed because the cover is too
+    large, and classified distributed over the caller's frame because
+    there are too many polygons — whether "auto" routes them to the
+    general path or the caller forces it.  The set mixes arities above
+    MAX_UNROLL_ARITY (general path) and overhangs the region's right
+    edge with points outside the region."""
+    import distributed_spatial_index_spark.operators.pip_join as pj
+    from distributed_spatial_index_spark.config import DEFAULT_REGION as R
+
+    rng = np.random.default_rng(11)
+    centers = rng.uniform(500, 8000, (6, 2))
+    polys = [(q, _star(*centers[q], a, rng))
+             for q, a in enumerate([3, 5, 13, 17, 24, 40])]
+    # overhangs x_hi: vertices beyond the region, points beyond it too
+    polys.append((6, _star(R.x_hi - 10.0, 4500.0, 20, rng, 40.0, 80.0)))
+    n = 3000
+    px = np.concatenate([rng.uniform(R.x_lo, R.x_hi + 90.0, n),
+                         rng.uniform(R.x_hi, R.x_hi + 90.0, 300)])
+    py = np.concatenate([rng.uniform(R.y_lo, R.y_hi, n),
+                         rng.uniform(4400.0, 4600.0, 300)])
+    for c in centers:  # points around each star's centre
+        px = np.append(px, c[0] + rng.uniform(-30, 30, 60))
+        py = np.append(py, c[1] + rng.uniform(-30, 30, 60))
+    pts = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(px, py))],
+        "id long, x double, y double",
+    )
+
+    calls = {"driver": 0, "distributed": 0}
+    driver, distributed = pj._driver_query_cells, pj._classified_query_cells_df
+
+    def spy_driver(*a, **k):
+        out = driver(*a, **k)
+        calls["driver"] += out is not None
+        return out
+
+    def spy_distributed(*a, **k):
+        calls["distributed"] += 1
+        return distributed(*a, **k)
+
+    monkeypatch.setattr(pj, "_driver_query_cells", spy_driver)
+    monkeypatch.setattr(pj, "_classified_query_cells_df", spy_distributed)
+    if scale == "cover_too_large":
+        monkeypatch.setattr(pj, "DRIVER_CLASSIFY_ROWS", 10)
+    if scale == "many_polygons":
+        monkeypatch.setattr(pj, "REQUEST_POLYGONS", 3)
+
+    out = pip_join(pts, _request_polygons(spark, polys), unroll_arity=mode)
+    got = sorted(map(tuple, out.collect()))
+    expect = sorted(
+        (q, i) for q, v in polys for i in np.flatnonzero(ray_cast_np(px, py, v))
+    )
+    assert got == expect
+    assert len({q for q, _ in got}) >= 5
+    # out-of-region points inside the overhanging polygon are found
+    assert any(px[i] > R.x_hi for _, i in got)
+    want = {"driver": (1, 0)}.get(scale, (0, 1))
+    assert (calls["driver"], calls["distributed"]) == want
+
+
+@pytest.mark.parametrize(
+    "arities,mode", [([3, 13, 40], "auto"), ([3, 4], "auto"), ([3, 4], None)]
+)
+def test_request_scale_reads_polygon_frame_once(spark, arities, mode):
+    """At request scale the caller's polygon frame runs exactly once — one
+    bounded collect serves the arity probe, the refine broadcast and the
+    classification, for the general path (chosen or forced) and the
+    unrolled groups alike.  Counted per row through an accumulator in the
+    frame's own lineage."""
+    rng = np.random.default_rng(3)
+    polys = [(q, _star(*rng.uniform(1000, 7000, 2), a, rng))
+             for q, a in enumerate(arities * 2)]
+    reads = spark.sparkContext.accumulator(0)
+
+    def counted(row):
+        reads.add(1)
+        return row
+
+    rdd = spark.sparkContext.parallelize(
+        [(q, [(float(x), float(y)) for x, y in v]) for q, v in polys], 2
+    ).map(counted)
+    frame = spark.createDataFrame(
+        rdd, "query_id long, vertices array<struct<x:double,y:double>>"
+    )
+    pts = src.geo_points(spark, SF_DIR, "lineitem")
+    pip_join(pts, frame, unroll_arity=mode).collect()
+    assert reads.value == len(polys)
+
+
+@pytest.mark.parametrize("request_polygons", [16_384, 1])
+def test_auto_groups_every_ring_of_a_query(spark, monkeypatch, request_polygons):
+    """A query_id may hold several rings of different arity.  The "auto"
+    arity probe must see every ring, not one per query_id: unrolling a
+    3-ring at arity 5 reads vertices past its end as NULL, which poisons
+    the XOR fold and silently drops the ring's hits.  Checked at request
+    scale (probe from the collected rows) and past it (probe on the
+    frame)."""
+    import distributed_spatial_index_spark.operators.pip_join as pj
+
+    monkeypatch.setattr(pj, "REQUEST_POLYGONS", request_polygons)
+    rng = np.random.default_rng(7)
+    tri = _star(2000.0, 2000.0, 3, rng, 40.0, 60.0)
+    pent = _star(6000.0, 6000.0, 5, rng, 40.0, 60.0)
+    polys = [(1, tri), (1, pent), (2, _star(4000.0, 4000.0, 4, rng))]
+    px = np.concatenate([c + rng.uniform(-60, 60, 400) for c in (2000.0, 6000.0, 4000.0)])
+    py = np.concatenate([c + rng.uniform(-60, 60, 400) for c in (2000.0, 6000.0, 4000.0)])
+    pts = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(px, py))],
+        "id long, x double, y double",
+    )
+    got = sorted(map(tuple, pip_join(pts, _request_polygons(spark, polys)).collect()))
+    expect = sorted(
+        (q, i) for q, v in polys for i in np.flatnonzero(ray_cast_np(px, py, v))
+    )
+    assert got == expect
+    # the 3-ring's own hits are present
+    assert any((1, i) in got for i in np.flatnonzero(ray_cast_np(px, py, tri)))
